@@ -16,20 +16,19 @@ int64).  Assignment ties break on cell id.  The whole 2-iteration run
 is a pure function of the data — bit-identical in any engine, any
 partitioning, any layout — so a DuckDB oracle can replay it unrolled.
 
-Scale shape per Lloyd step: one posexplode→groupBy(cell, pos) partial
-aggregation for centroids (map-side combined; k×dim result — always
-tiny), centroids broadcast back, assignment is a map-side argmin over
-k distance expressions.  The corpus shuffles only in the centroid
-aggregation, and only (cell, pos, coord) triples move — never whole
-vectors.  A fixed iteration count keeps the plan finite (the
-convergence-driven variant would reuse the scalar-count pattern of
-``dedup.cluster_assignments``).
+The Lloyd loop itself is :func:`similarity.pq_train_codes` with one
+subspace (``m=1``): a product quantizer with a single subvector IS
+k-means, so both share one integer Lloyd step (map-side argmin against
+one broadcast centroid row; only (cell, pos, coord) triples shuffle).
+A fixed iteration count keeps the plan finite and the oracle an unroll.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from pyspark_pipelining_spark.operators.similarity import pq_train_codes
 
 GRID = 1_000_000
 
@@ -53,56 +52,8 @@ def kmeans_int(
     (``dedup.semantic_dedup``'s cosine stage), where re-snapping and
     joining back on id would cost an extra scan plus a shuffle join.
     """
-    if iters < 1:
-        raise ValueError("iters must be >= 1 (distance needs a centroid)")
-    # snap via the proven centroid_cosines idiom: widen float->double
-    # BEFORE the multiply (a float-precision product rounds differently
-    # across engines), then round — portable on both engines
-    snapped = emb_df.select(
-        id_col,
-        F.expr(
-            f"transform({vec_col},"
-            f" x -> CAST(round(CAST(x AS DOUBLE) * {grid}) AS BIGINT))"
-        ).alias("s"),
-    ).localCheckpoint(eager=True)
-    assigned = snapped.select(
-        id_col, "s", F.pmod(F.col(id_col), F.lit(k)).cast("long").alias("cell")
+    codes, _ = pq_train_codes(
+        emb_df, m=1, k=k, iters=iters, id_col=id_col, vec_col=vec_col, grid=grid
     )
-    # map-side argmin: all k centroids ride in ONE broadcast row as an
-    # array of (cell, centroid) structs, and the assignment is a
-    # higher-order fold per vector — the corpus itself never shuffles
-    # (the earlier crossJoin + groupBy(id, vec) formulation re-shuffled
-    # every vector, array key included, once per Lloyd step).  array_min
-    # over (d, cell) structs keeps the cell-ascending tie rule and is
-    # insensitive to collect_list's nondeterministic order.
-    best = F.expr(
-        "array_min(transform(cents, c -> struct("
-        "  aggregate(zip_with(s, c.centroid, (a, b) -> (a - b) * (a - b)),"
-        "            CAST(0 AS BIGINT), (acc, x) -> acc + x) AS d,"
-        "  c.cell AS cell)))"
-    )
-    for _ in range(iters):
-        cent_row = (
-            assigned.select("cell", F.posexplode("s").alias("pos", "x"))
-            .groupBy("cell", "pos")
-            .agg(F.expr("sum(x) div count(*)").alias("c"))
-            .groupBy("cell")
-            .agg(
-                F.expr(
-                    "transform(array_sort(collect_list(struct(pos, c))), p -> p.c)"
-                ).alias("centroid")
-            )
-            .agg(F.collect_list(F.struct("cell", "centroid")).alias("cents"))
-        )
-        assigned = (
-            snapped.crossJoin(F.broadcast(cent_row))
-            .withColumn("best", best)
-            .select(
-                id_col,
-                "s",
-                F.col("best.cell").alias("cell"),
-                F.col("best.d").alias("d"),
-            )
-        )
-    cols = [id_col, "cell", "d"] + (["s"] if keep_vec else [])
-    return assigned.select(*cols)
+    cols = [id_col, "cell", "d"] + ([F.col("ss").alias("s")] if keep_vec else [])
+    return codes.select(*cols)

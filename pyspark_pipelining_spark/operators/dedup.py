@@ -27,6 +27,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from pyspark_pipelining_spark import cache
+from pyspark_pipelining_spark.operators.graph import symmetrize
+from pyspark_pipelining_spark.operators.iterate import iterate
 from pyspark_pipelining_spark.operators.text import with_words
 
 
@@ -253,59 +255,21 @@ def cluster_assignments(
       template chains (doc A ~ B ~ C ... with A ≁ C) produce diameters
       in the dozens, where plain propagation exhausts any sane round
       budget (measured: 13 rounds at sf0.1 vs 7 with the jump);
-    * rounds run in **blocks of ``block`` (default 4) per driver
-      action** (r17; guide §1.2 fewer passes): every round's label
-      frame is a LAZY ``localCheckpoint`` — LogicalRDD replaces the
-      plan at construction time, so each round's three references to
-      the previous frame (prop join, union branch, jump table) share
-      ONE materialization inside the block job instead of cloning the
-      subtree 3^k ways (what made deep fusion lose in r16, which
-      checkpointed only block boundaries);
-    * convergence: labels are monotonically non-increasing, so
-      ``sum(cluster_id)`` is unchanged iff no label moved, and a
-      stable round is a fixpoint of the round operator (a stable
-      labeling is component-constant, standard argument).  ONE action
-      per block computes every round's sum — the cached frames union
-      with a round tag into a single tiny grouped aggregate — and the
-      first adjacent equal pair inside the chain stops the loop, so
-      the fixpoint is detected mid-block and the old separate
-      init-sum action and confirmation block are gone.  At sf0.1 the
-      7-round fixpoint costs 2 block actions instead of the former 5
-      (init sum + 4 blocks); labels never collect to the driver.
+    * the rounds run on :func:`operators.iterate.iterate` (lazy
+      per-round checkpoints, one probe action per ``block`` rounds).
+      Labels only ever decrease, so ``sum(cluster_id)`` is unchanged
+      iff no label moved, and a stable labeling is component-constant
+      (standard argument) — the probe the kernel needs.  Labels never
+      collect to the driver.
 
-    Lineage control: iterative plans double in size per round if each
-    references the full upstream pipeline (e.g. the 16-hash minhash
-    expression), which OOMs the *driver* in Catalyst long before any
-    data moves — so the edge list and each round's labels are
-    ``localCheckpoint``-ed (materialized, plan truncated).  On a real
-    cluster with lost-executor concerns, swap for reliable
-    ``checkpoint()`` with a checkpoint dir; semantics are identical.
+    On a real cluster with lost-executor concerns, swap the local
+    checkpoints for reliable ``checkpoint()`` with a checkpoint dir;
+    semantics are identical.
     """
-    # symmetrize with a map-side explode (r17): the former
-    # union-of-two-scans referenced the pair pipeline from two branches,
-    # which forced an EAGER checkpoint of `p` (two union branches would
-    # race-compute the LSH pipeline inside one job; within-job stage
-    # sharing dedups by RDD identity, but the two branches were distinct
-    # scans of the same cached RDD executing in one stage's disjoint
-    # task ranges — each task range computing partitions concurrently).
-    # One explode = one reference = the whole pair pipeline runs exactly
-    # once inside the first block job, and the separate pair
-    # materialization action disappears.
-    edges = (
-        pairs.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col("doc_1").alias("src"), F.col("doc_2").alias("dst")
-                    ),
-                    F.struct(
-                        F.col("doc_2").alias("src"), F.col("doc_1").alias("dst")
-                    ),
-                )
-            ).alias("e")
-        )
-        .select("e.src", "e.dst")
-        .localCheckpoint(eager=False)
+    # one lazily checkpointed explode: the pair pipeline runs exactly
+    # once, inside the first block job
+    edges = symmetrize(pairs, "doc_1", "doc_2", "src", "dst").localCheckpoint(
+        eager=False
     )
     # fused round 0: every vertex appears as src in the symmetrized edge
     # list, so one groupBy yields both the vertex set and its first label
@@ -316,7 +280,6 @@ def cluster_assignments(
             F.col("src").alias("doc_id"),
             F.least("src", "nbr_min").alias("cluster_id"),
         )
-        .localCheckpoint(eager=False)
     )
 
     def one_round(lbl: DataFrame) -> DataFrame:
@@ -340,35 +303,9 @@ def cluster_assignments(
             F.least("mid", F.coalesce("p_lbl", "mid")).alias("cluster_id"),
         )
 
-    prev_sum: int | None = None  # entry sum unknown before the first action
-    total = 0
-    while total < max_iter:
-        k = min(block, max_iter - total)
-        frames: list[DataFrame] = []
-        cur = labels
-        for _ in range(k):
-            cur = one_round(cur).localCheckpoint(eager=False)
-            frames.append(cur)
-            total += 1
-        # one action: every round's sum via a tagged union over the
-        # cached frames (the first block also tags the init frame, whose
-        # sum seeds the chain).  Stage graphs dedupe by RDD identity, so
-        # each frame materializes exactly once in this job.
-        probe = ([labels] if prev_sum is None else []) + frames
-        tagged = probe[0].select(F.lit(0).alias("i"), "cluster_id")
-        for i, f in enumerate(probe[1:], start=1):
-            tagged = tagged.unionByName(f.select(F.lit(i).alias("i"), "cluster_id"))
-        rows = tagged.groupBy("i").agg(F.sum("cluster_id").alias("s")).collect()
-        sums = [r["s"] for r in sorted(rows, key=lambda r: r["i"])]
-        chain = ([] if prev_sum is None else [prev_sum]) + sums
-        for j in range(1, len(chain)):
-            if chain[j] == chain[j - 1]:
-                # round j changed nothing: chain[j-1]'s frame is the
-                # fixpoint (chain index 0 is the block-entry labels)
-                return labels if j == 1 else frames[j - 2]
-        prev_sum = chain[-1]
-        labels = frames[-1]
-    return labels
+    return iterate(
+        labels, one_round, max_iter=max_iter, probe=F.sum("cluster_id"), block=block
+    )
 
 
 def dedup_clusters(df: DataFrame, pairs: DataFrame, id_col: str = "doc_id") -> DataFrame:

@@ -21,16 +21,23 @@ finite.  The (src, dst, deg) edge table is materialized ONCE up front
 (``localCheckpoint``): the iterative plan references it every round,
 and without truncation Spark re-executes the whole upstream edge
 pipeline (an LSH candidate join here) per reference — measured 18–28 s
-→ ~2 s at sf0.1.  The node count becomes a driver scalar (the same
-pattern as cluster_assignments' convergence check) so per-round work
-is exactly one join + one aggregation; a symmetrized graph needs no
-per-round re-join to the node set (every node has in-edges).
+→ ~2 s at sf0.1.  The node count becomes a driver scalar so per-round
+work is exactly one join + one aggregation; a symmetrized graph needs
+no per-round re-join to the node set (every node has in-edges).
+
+Loops in this module: convergence loops (:func:`kcore_peel`) run on
+the one fixpoint kernel, ``operators/iterate.py``, which owns the
+checkpoint/probe/convergence discipline; fixed-count unrolls with no
+loop control (:func:`pagerank_int`, :func:`lpa_communities`) are plain
+``for`` loops.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from pyspark_pipelining_spark.operators.iterate import iterate
 
 SCALE = 10**12
 
@@ -86,9 +93,11 @@ def pagerank_int(
     # it in the same job (distinct() sits above the opaque RDD scan, so
     # nothing is pruned), saving a full materialization pass per call.
     ed2 = ed.join(deg, on="id").localCheckpoint(eager=False)
-    # n as a driver scalar (the cluster_assignments convergence-check
-    # pattern): it parameterizes integer constants the oracle mirrors
+    # n as a driver scalar: it parameterizes integer constants the
+    # oracle mirrors
     n = ed2.select("id").distinct().count()
+    if n == 0:  # no edges: no ranks, and no 1/n to take
+        return ed2.select("id", F.lit(0).cast("long").alias("r"))
     r0 = scale // n
     base_c = (scale * (damp_den - damp_num) // damp_den) // n
     # symmetrized input ⇒ every node has in-edges ⇒ the (dst) aggregation
@@ -233,70 +242,34 @@ def kcore_peel(
     a: str = "doc_1",
     b: str = "doc_2",
 ) -> DataFrame:
-    """Bounded k-core peeling: ``rounds`` synchronous rounds of
-    removing nodes whose current degree is below ``k`` (and their
-    edges).  A fixed round count keeps the plan finite and the oracle
-    expressible (the SQL unrolls the same rounds); full-fixpoint coreness
-    would iterate to convergence with the same per-round shape.
+    """k-core peeling: up to ``rounds`` synchronous rounds of removing
+    nodes whose current degree is below ``k`` (and their edges),
+    stopping early at the fixpoint where every surviving node has
+    degree ≥ k — the true k-core.  Peeling is monotone, so stopping at
+    the fixpoint returns the same edges as running all ``rounds``; a
+    small bound keeps the registered query's oracle expressible (the
+    SQL unrolls the same rounds), a large one computes the k-core.
 
     Scale shape per round: one node-keyed degree aggregation and one
     semi-join of edges against surviving nodes — both shuffles keyed on
-    node id.  The edge table is ``localCheckpoint``-ed up front so the
-    iterative plan never re-executes the upstream candidate-pair
-    pipeline (same pattern as pagerank_int).
+    node id.  Rounds run on :func:`operators.iterate.iterate` with the
+    directed edge count as probe: it is unchanged exactly when no node
+    fell below k.
 
-    Output: ``node, degree`` for nodes surviving all rounds, with their
+    Output: ``node, degree`` for nodes surviving the peel, with their
     post-peel degree.
     """
-    edges = symmetrize(pairs, a, b).localCheckpoint(eager=True)
-    for _ in range(rounds):
+
+    def peel(edges: DataFrame) -> DataFrame:
         deg = edges.groupBy("s").agg(F.count(F.lit(1)).alias("degree"))
         keep = deg.filter(F.col("degree") >= k).select("s")
-        edges = (
-            edges.join(keep, "s", "leftsemi")
-            .join(keep.select(F.col("s").alias("d")), "d", "leftsemi")
-            .localCheckpoint(eager=True)
+        return edges.join(keep, "s", "leftsemi").join(
+            keep.select(F.col("s").alias("d")), "d", "leftsemi"
         )
-    return (
-        edges.groupBy(F.col("s").alias("node"))
-        .agg(F.count(F.lit(1)).alias("degree"))
-        .orderBy("node")
+
+    edges = iterate(
+        symmetrize(pairs, a, b), peel, max_iter=rounds, probe=F.count(F.lit(1))
     )
-
-
-def kcore_fixpoint(
-    pairs: DataFrame,
-    k: int = 2,
-    max_rounds: int = 50,
-    a: str = "doc_1",
-    b: str = "doc_2",
-) -> DataFrame:
-    """k-core to FIXPOINT: peel until no directed edge is removed
-    (every surviving node has degree ≥ k — the true k-core), with
-    ``max_rounds`` as a safety bound only.
-
-    Convergence is detected with one driver-side ``count()`` per round
-    over the checkpointed (already materialized) edge set — a scalar
-    loop-control action, not data movement; the per-round dataflow is
-    identical to :func:`kcore_peel` (degree agg + two semi-joins,
-    shuffles keyed on node id, ``localCheckpoint`` truncating lineage
-    each round).  Peeling is monotone so "edge count unchanged" is
-    exactly "no node fell below k" — the fixpoint.
-    """
-    edges = symmetrize(pairs, a, b).localCheckpoint(eager=True)
-    n_edges = edges.count()
-    for _ in range(max_rounds):
-        deg = edges.groupBy("s").agg(F.count(F.lit(1)).alias("degree"))
-        keep = deg.filter(F.col("degree") >= k).select("s")
-        edges = (
-            edges.join(keep, "s", "leftsemi")
-            .join(keep.select(F.col("s").alias("d")), "d", "leftsemi")
-            .localCheckpoint(eager=True)
-        )
-        remaining = edges.count()
-        if remaining == n_edges:
-            break
-        n_edges = remaining
     return (
         edges.groupBy(F.col("s").alias("node"))
         .agg(F.count(F.lit(1)).alias("degree"))
@@ -321,7 +294,7 @@ def lpa_communities(
     Scale shape per round: one edge ⋈ labels shuffle keyed on node id,
     one (node, label) count with map-side partials, one per-node
     argmax window — all keyed on node.  Rounds run in BLOCKS OF TWO
-    per ``localCheckpoint`` (the cluster_assignments block discipline):
+    per ``localCheckpoint``:
     each label frame is referenced exactly once by the next round, so
     fusing two rounds into one job executes the same shuffles while
     skipping a materialization pass — measured 2.60 s → 2.23 s median

@@ -538,18 +538,20 @@ def pq_train_codes(
     memory budget ANN search needs.
 
     The vector splits into ``m`` contiguous subvectors of ``dim/m``
-    coordinates; each subspace runs the deterministic integer Lloyd of
-    ``cluster.kmeans_int`` (1/``grid`` lattice snap, truncated integer
-    centroid means, exact int64 squared-L2, ties on cell id, seeding
-    ``cell = id mod k``) — all ``m`` subspaces advance together in ONE
-    plan keyed by ``sub``.
+    coordinates; each subspace runs a deterministic integer Lloyd
+    (1/``grid`` lattice snap, truncated integer centroid means, exact
+    int64 squared-L2, ties on cell id, seeding ``cell = id mod k``) —
+    all ``m`` subspaces advance together in ONE plan keyed by ``sub``.
+    ``m=1`` is plain integer k-means over the whole vector, whatever
+    its length (``cluster.kmeans_int``).
 
     Scale shape: assignment is a map-side higher-order argmin against
     one broadcast (sub, cell, centroid) row — vectors NEVER shuffle;
     the only exchanges are the (sub, cell, spos) centroid aggregations
     (≤ m·k·dim/m rows) per Lloyd step.
 
-    Returns ``(codes, codebook)``: codes = (id, sub, cell, d);
+    Returns ``(codes, codebook)``: codes = (id, sub, cell, d, ss), ss
+    being the snapped subvector the assignment already carries;
     codebook = (sub, cell, centroid) of the final iteration.
     """
     if dim % m:
@@ -567,19 +569,27 @@ def pq_train_codes(
             f" x -> CAST(round(CAST(x AS DOUBLE) * {grid}) AS BIGINT))"
         ).alias("s"),
     )
-    subs = snapped.select(
-        id_col,
-        F.explode(
-            F.expr(
-                f"transform(sequence(0, {m - 1}),"
-                f" j -> struct(CAST(j AS BIGINT) AS sub,"
-                f" slice(s, j * {d2} + 1, {d2}) AS ss))"
-            )
-        ).alias("e"),
-    ).select(id_col, "e.sub", "e.ss").localCheckpoint(eager=True)
+    if m == 1:
+        subs = snapped.select(
+            id_col, F.lit(0).cast("long").alias("sub"), F.col("s").alias("ss")
+        )
+    else:
+        subs = snapped.select(
+            id_col,
+            F.explode(
+                F.expr(
+                    f"transform(sequence(0, {m - 1}),"
+                    f" j -> struct(CAST(j AS BIGINT) AS sub,"
+                    f" slice(s, j * {d2} + 1, {d2}) AS ss))"
+                )
+            ).alias("e"),
+        ).select(id_col, "e.sub", "e.ss")
+    subs = subs.localCheckpoint(eager=True)
     assigned = subs.select(
         id_col, "sub", "ss", F.pmod(F.col(id_col), F.lit(k)).cast("long").alias("cell")
     )
+    # array_min over (d, cell) structs keeps the cell-ascending tie rule
+    # and is insensitive to collect_list's nondeterministic order
     best = F.expr(
         "array_min(transform(filter(cents, c -> c.sub = sub), c -> struct("
         "  aggregate(zip_with(ss, c.centroid, (a, b) -> (a - b) * (a - b)),"
@@ -613,7 +623,7 @@ def pq_train_codes(
                 F.col("b.d").alias("d"),
             )
         )
-    return assigned.select(id_col, "sub", "cell", "d"), codebook
+    return assigned.select(id_col, "sub", "cell", "d", "ss"), codebook
 
 
 def pq_adc_topk(

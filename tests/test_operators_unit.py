@@ -9,6 +9,8 @@ import types
 import pytest
 from pyspark.sql import functions as F
 
+from pyspark_pipelining_spark.operators import graph
+from pyspark_pipelining_spark.operators.cluster import kmeans_int
 from pyspark_pipelining_spark.operators.dedup import (
     cluster_assignments,
     dedup_clusters,
@@ -18,9 +20,11 @@ from pyspark_pipelining_spark.operators.dedup import (
     word_ngrams,
 )
 from pyspark_pipelining_spark.operators.frequency import frequency_histogram
+from pyspark_pipelining_spark.operators.iterate import iterate
 from pyspark_pipelining_spark.operators.media import make_media, union_frames
 from pyspark_pipelining_spark.operators.reach import reach_count
 from pyspark_pipelining_spark.operators.reach_week import incremental_weekly_reach
+from pyspark_pipelining_spark.operators.similarity import learned_centroids, pq_train_codes
 from pyspark_pipelining_spark.sources.registry import SchemaError
 
 
@@ -2592,3 +2596,90 @@ def test_with_ivf_cell_equals_inline_assign(spark):
     }
     assert a == b
     assert a[0] == 0, a
+
+
+def _empty_inputs(spark):
+    """Zero-row frames with the real schemas: documents/embeddings as
+    loaded, and the LSH pair list built from the empty documents."""
+    from pyspark_pipelining_spark.sources.registry import load_table
+    from tests.conftest import SF_SMOKE
+
+    docs = load_table(spark, SF_SMOKE, "documents").limit(0)
+    emb = load_table(spark, SF_SMOKE, "embeddings").limit(0)
+    return docs, minhash_lsh_pairs(docs), emb
+
+
+_LOOP_OPERATORS = {
+    "cluster_assignments": lambda docs, pairs, emb: cluster_assignments(pairs),
+    "kcore_peel": lambda docs, pairs, emb: graph.kcore_peel(pairs, k=2, rounds=50),
+    "lpa_communities": lambda docs, pairs, emb: graph.lpa_communities(pairs),
+    "pagerank_int": lambda docs, pairs, emb: graph.pagerank_int(
+        graph.symmetrize(pairs, "doc_1", "doc_2", "src", "dst")
+    ),
+    "kmeans_int": lambda docs, pairs, emb: kmeans_int(emb, keep_vec=True),
+    "learned_centroids": lambda docs, pairs, emb: learned_centroids(emb),
+    "pq_train_codes": lambda docs, pairs, emb: pq_train_codes(emb)[0],
+    "dedup_clusters": lambda docs, pairs, emb: dedup_clusters(docs, pairs),
+}
+
+
+@pytest.mark.quick
+@pytest.mark.parametrize("name", sorted(_LOOP_OPERATORS))
+def test_loop_operators_accept_empty_input(spark, name):
+    """Every loop operator returns zero rows on zero-row input instead
+    of crashing (an empty pair list once hit ``chain[-1]`` in the
+    connected-components loop and ``scale // 0`` in PageRank)."""
+    assert _LOOP_OPERATORS[name](*_empty_inputs(spark)).collect() == []
+
+
+def _count_up(cap):
+    """Kernel step: every value moves one toward ``cap``."""
+    return lambda df: df.select(F.least(F.col("v") + 1, F.lit(cap)).alias("v"))
+
+
+def _iterate_log(caplog):
+    return [r.getMessage() for r in caplog.records if r.getMessage().startswith("iterate:")]
+
+
+@pytest.mark.quick
+@pytest.mark.parametrize("block, actions", [(4, 1), (2, 2)])
+def test_iterate_stops_at_first_unchanged_round(spark, caplog, block, actions):
+    state = spark.createDataFrame([(0,), (1,)], "v bigint")
+    # {0,1} -> {1,2} -> {2,2} -> {2,2}: round 3 is the first to change
+    # nothing; it is found mid-block (block 4) or in the 2nd block (block
+    # 2), and either way after rounds 1-4
+    with caplog.at_level("INFO"):
+        out = iterate(state, _count_up(2), max_iter=12, probe=F.sum("v"), block=block)
+    assert sorted(r["v"] for r in out.collect()) == [2, 2]
+    assert _iterate_log(caplog) == [
+        f"iterate: converged, round 3 changed nothing; rounds=4 probe_actions={actions}"
+    ]
+
+
+@pytest.mark.quick
+def test_iterate_stops_at_max_iter(spark, caplog):
+    state = spark.createDataFrame([(0,)], "v bigint")
+    with caplog.at_level("INFO"):
+        out = iterate(state, _count_up(100), max_iter=5, probe=F.sum("v"))
+    assert [r["v"] for r in out.collect()] == [5]
+    # one block of 4 rounds, one of 1
+    assert _iterate_log(caplog) == [
+        "iterate: hit max_iter=5 without converging; rounds=5 probe_actions=2"
+    ]
+
+
+@pytest.mark.quick
+def test_iterate_zero_rounds_returns_state(spark):
+    state = spark.createDataFrame([(0,)], "v bigint")
+    assert iterate(state, _count_up(100), max_iter=0, probe=F.sum("v")) is state
+
+
+@pytest.mark.quick
+def test_iterate_empty_state_returns_after_one_action(spark, caplog):
+    state = spark.createDataFrame([], "v bigint")
+    with caplog.at_level("INFO"):
+        out = iterate(state, _count_up(100), max_iter=12, probe=F.sum("v"))
+    assert out.collect() == [] and out.columns == ["v"]
+    assert _iterate_log(caplog) == [
+        "iterate: converged, round 1 changed nothing; rounds=4 probe_actions=1"
+    ]

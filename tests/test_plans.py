@@ -689,16 +689,16 @@ def test_session_paths_topk_is_take_ordered(spark):
 def test_convergence_probes_are_bounded_actions_on_checkpointed_state(
     spark, monkeypatch
 ):
-    """r06 watch-list: the per-round driver scalars in
-    cluster_assignments / kcore_fixpoint are loop control over
-    checkpointed, already-materialized frames.  Pin (1) the action
-    count stays bounded by rounds+1 (convergence detection fires) and
-    (2) every probed plan is a scan/agg of materialized state
-    (LogicalRDD), never a join/recompute pipeline — so a refactor
-    cannot silently turn loop control into a data-path collect."""
+    """r06 watch-list: the driver actions in cluster_assignments /
+    kcore_peel are loop control over checkpointed, already-materialized
+    frames.  Pin (1) the exact action count the fixpoint kernel
+    (operators/iterate.py) gives, and (2) every probed plan is a
+    scan/agg of materialized state (LogicalRDD), never a join/recompute
+    pipeline — so a refactor cannot silently turn loop control into a
+    data-path collect."""
     # patch the CONCRETE class: pyspark.sql.DataFrame is the abstract
     # API in Spark 4; sessions hand out classic.dataframe.DataFrame,
-    # whose own first/count would shadow a base-class patch
+    # whose own first/count/collect would shadow a base-class patch
     try:
         from pyspark.sql.classic.dataframe import DataFrame
     except ImportError:  # older pyspark: one concrete class
@@ -707,33 +707,42 @@ def test_convergence_probes_are_bounded_actions_on_checkpointed_state(
     from pyspark_pipelining_spark.operators import dedup, graph
 
     probed: list[str] = []
-    orig_first, orig_count = DataFrame.first, DataFrame.count
 
-    def spy_first(self):
-        probed.append(self._jdf.queryExecution().optimizedPlan().toString())
-        return orig_first(self)
+    def spy(name):
+        orig = getattr(DataFrame, name)
 
-    def spy_count(self):
-        probed.append(self._jdf.queryExecution().optimizedPlan().toString())
-        return orig_count(self)
+        def wrapped(self, *args, **kwargs):
+            probed.append(self._jdf.queryExecution().optimizedPlan().toString())
+            return orig(self, *args, **kwargs)
 
-    monkeypatch.setattr(DataFrame, "first", spy_first)
-    monkeypatch.setattr(DataFrame, "count", spy_count)
+        monkeypatch.setattr(DataFrame, name, wrapped)
+
+    for name in ("first", "count", "collect"):
+        spy(name)
 
     # triangle (its own 2-core) + a pendant edge that peels away
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 1), (4, 5)], "doc_1 bigint, doc_2 bigint"
     )
-    dedup.cluster_assignments(pairs, max_iter=12).collect()
+    # the loops run while the operators build their result frames; the
+    # results are collected only after the probes are snapshotted.
+    # Connected components: the fused init labels are already final
+    # ({1,2,3} -> 1, {4,5} -> 4), so round 1 is the first to change
+    # nothing; it sits in the first 4-round block -> ceil(1/4) = 1 action.
+    cc = dedup.cluster_assignments(pairs, max_iter=12)
     cc_probes, probed[:] = list(probed), []
-    # initial sum + one per executed block; converges after one block here
-    assert 2 <= len(cc_probes) <= (12 + 1) // 2 + 1
-    graph.kcore_fixpoint(pairs, k=2).collect()
-    kc_probes = list(probed)
-    # initial count + peel round + fixpoint-confirm round — NOT max_rounds
-    assert 2 <= len(kc_probes) <= 4
+    assert len(cc_probes) == 1
+    # k-core: round 1 peels the pendant (8 -> 6 directed edges), round 2
+    # changes nothing -> ceil(2/4) = 1 action, NOT one per round.
+    kc = graph.kcore_peel(pairs, k=2, rounds=50)
+    kc_probes, probed[:] = list(probed), []
+    assert len(kc_probes) == 1
     for plan in cc_probes + kc_probes:
         assert "LogicalRDD" in plan and "Join" not in plan, plan
+    assert sorted(tuple(r) for r in cc.collect()) == [
+        (1, 1), (2, 1), (3, 1), (4, 4), (5, 4)
+    ]
+    assert sorted(tuple(r) for r in kc.collect()) == [(1, 2), (2, 2), (3, 2)]
 
 
 @pytest.mark.quick

@@ -769,10 +769,12 @@ def _python_kcore_fixpoint(edges, k):
 )
 @settings(max_examples=8, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
 def test_kcore_fixpoint_matches_python_model(spark, edges):
-    from pyspark_pipelining_spark.operators.graph import kcore_fixpoint
+    from pyspark_pipelining_spark.operators.graph import kcore_peel
 
     pairs = spark.createDataFrame(edges, ["doc_1", "doc_2"])
-    got = {r["node"]: r["degree"] for r in kcore_fixpoint(pairs, k=2).collect()}
+    # 50 rounds: far past any fixpoint of a 10-node graph, so the early
+    # stop, not the bound, ends the peel
+    got = {r["node"]: r["degree"] for r in kcore_peel(pairs, k=2, rounds=50).collect()}
     want = _python_kcore_fixpoint(edges, 2)
     assert got == want
     # fixpoint invariant: every survivor has degree >= k
@@ -800,7 +802,7 @@ def test_kcore_registered_rounds_reach_fixpoint_sf001(spark):
     }
     fix = {
         (r["node"], r["degree"])
-        for r in graph.kcore_fixpoint(pairs, k=2).collect()
+        for r in graph.kcore_peel(pairs, k=2, rounds=50).collect()
     }
     assert bounded == fix
     assert all(d >= 2 for _n, d in fix)
